@@ -4,10 +4,13 @@ The reference serves search over HTTP from a hand-rolled webserver
 (Integration/src/cis5550/jobs/Searcher.java:128-317 routes /search and
 /words on webserver/Server.java:147-160). This is the Spark-native
 analogue: the same warm engine `jobs/serve_job.py` drives over stdin,
-fronted by the stdlib ThreadingHTTPServer — each request is a small warm
-Spark job; Spark schedules concurrent driver threads fine, so requests
-overlap. The hand-rolled socket/HTTP layer of the reference is exactly
-the infrastructure SURVEY §7 absorbs into commodity layers.
+fronted by the stdlib ThreadingHTTPServer. A small request runs its
+kernel on the driver over one fetch of its segments, a larger one as a
+per-shard Spark job (`SearchEngine`'s two arms, split by
+`engine.LOCAL_ARM_MAX_BYTES`); Spark schedules concurrent driver threads
+fine, so requests overlap. The hand-rolled socket/HTTP layer of
+the reference is exactly the infrastructure SURVEY §7 absorbs into
+commodity layers.
 
 Routes (JSON replies):
   GET /search?q=<text>&k=10&mode=or|and[&role=<role>]  ranked BM25
@@ -16,7 +19,8 @@ Routes (JSON replies):
   GET /near?q=<text>&k=10&window=8                     all terms within window
   GET /hybrid?q=<text>&vec=<id>&k=10                   BM25 + IVF-ANN RRF
   GET /words?prefix=<p>&n=10                           autocomplete by df
-  GET /stats                                           corpus stats + p50
+  GET /stats                                           corpus stats, p50,
+       requests served by each arm (served_local, served_distributed)
   POST /delete?ids=1,2,3                               tombstone doc ids
        (engine-local metadata: the ids vanish from every subsequent
        search; durable after a /checkpoint, folded into the at-rest
@@ -162,9 +166,12 @@ def make_handler(engine: SearchEngine, lats):   # lats: bounded deque
                         window = list(lats)
                     window.sort()           # p50 of last <=10k
                     p50 = window[len(window) // 2] if window else 0.0
+                    arms = engine.served_counts()
                     return self._json(200, {
                         "n_docs": n, "avgdl": round(avgdl, 3),
-                        "served": len(window), "p50_sec": round(p50, 4)})
+                        "served": len(window), "p50_sec": round(p50, 4),
+                        "served_local": arms["local"],
+                        "served_distributed": arms["distributed"]})
                 return self._json(404, {"err": f"no route {u.path}"})
             except ValueError as e:       # bad k/n etc.
                 return self._json(400, {"err": str(e)})
@@ -260,7 +267,7 @@ def main() -> None:
     engine = SearchEngine(spark, args.index, use_packed=not args.exhaustive,
                           bucketed_path=args.bucketed,
                           packed_bucketed_path=args.packed_bucketed)
-    engine.search("warmup probe", k=1)    # prime codegen + the join path
+    engine.search("warmup probe", k=1)    # prime codegen + the hydrate scan
     if args.embeddings:
         engine.warm_hybrid(args.embeddings, args.ivf_root)
     srv = serve_http(engine, args.port)

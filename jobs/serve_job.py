@@ -148,7 +148,7 @@ def main() -> None:
     # prime codegen/Arrow workers so the FIRST user request isn't the one
     # paying JIT cost (the reference Searcher warms its IDF cache the same
     # way at startup)
-    engine.search("warmup probe", k=1)  # hydrated: warms the join path too
+    engine.search("warmup probe", k=1)  # hydrated: warms the hydrate scan too
     print(f"ready\twarmup={round(time.perf_counter() - t0, 2)}s", flush=True)
     lats = serve(engine)
     if lats:

@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .codec import varint_decode, varint_encode, varint_lengths
+from .codec import varint_decode, varint_encode
 
 PFD_BLOCK = 128
 _MAX_B = 32  # packed-width cap; wider values ride the exception path
@@ -56,14 +56,25 @@ TF_STREAMS = ("doc_gaps", "tfs", "dls")
 POS_STREAMS = ("doc_gaps", "pos_counts", "pos_deltas")
 
 
+def _stream_len(streams):
+    """Column: a segment's at-rest bytes over the given stream columns."""
+    from pyspark.sql import functions as F
+    return sum((F.length(c) for c in streams[1:]), F.length(streams[0]))
+
+
 def stream_bytes(df, streams) -> int:
     """Total at-rest bytes of the given stream columns, one scan."""
     from pyspark.sql import functions as F
-    total = None
-    for c in streams:
-        e = F.sum(F.length(c))
-        total = e if total is None else total + e
-    return int(df.agg(total.alias("b")).collect()[0]["b"] or 0)
+    return int(df.agg(F.sum(_stream_len(streams)).alias("b"))
+               .collect()[0]["b"] or 0)
+
+
+def term_stream_bytes(df, streams) -> dict[str, int]:
+    """term -> at-rest bytes of the given stream columns over all of the
+    term's segments: one aggregation, a row per term (metadata scale)."""
+    from pyspark.sql import functions as F
+    return {r["term"]: int(r["b"]) for r in df.groupBy("term").agg(
+        F.sum(_stream_len(streams)).alias("b")).collect()}
 
 
 def _bit_lengths(v: np.ndarray) -> np.ndarray:
@@ -123,9 +134,14 @@ def pfd_encode(values: np.ndarray) -> bytes:
 
     bl = _bit_lengths(blocks) * in_range
     # candidate widths: {0} u the distinct bit lengths present (capped).
-    # EXACT, not a heuristic: between two present bit lengths the exception
-    # set is constant while packed bytes grow with b, so cost(b) is
-    # minimized at the interval's lower end — always 0 or a present bl.
+    # A heuristic, not an exhaustive search: between two present bit
+    # lengths the exception set is constant and packed bytes grow with b,
+    # but the exceptions' varint high parts shrink a byte per 7 bits of b,
+    # and the _MAX_B cap can drop the widest present length. So a width
+    # strictly between candidates can cost less (e.g. 51 values of bl=3,
+    # 36 of bl=25, 41 of bl=32: b=4 costs 413 bytes, the best candidate
+    # b=3 costs 474). Each candidate's cost below is exact; roundtrips are
+    # exact whatever width is chosen.
     cand = np.unique(np.concatenate(
         [[0], np.minimum(np.unique(bl), _MAX_B)]))
     # exact per-(candidate, block) byte cost: packed bytes + 1 position

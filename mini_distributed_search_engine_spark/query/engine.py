@@ -3,8 +3,24 @@
 Replaces the reference's Searcher HTTP endpoint (`jobs/Searcher.java:128-317`:
 per-request KVS point lookups + driver-side heap). Construction warms the
 session the way Searcher's startup warmed its IDF cache
-(Searcher.java:64-81,126): the packed index and stats are cached once; each
-`search()` is then a small Spark job.
+(Searcher.java:64-81,126): the packed index and stats are cached once,
+with the per-term segment bytes and per-role doc counts beside them.
+
+The eager methods (`search`, `search_phrase`, `search_near`,
+`search_proximity`) then pick one of two arms per request
+(`executor.py`), both running the same shard kernels:
+
+* local: when the bytes the request would pull to the driver — its terms'
+  segment streams, plus 8 per allowed doc id of a role filter — are at
+  most `LOCAL_ARM_MAX_BYTES` in each segment family, one fetch of the
+  selected segments and the kernel on the driver, with no per-request
+  Python-worker job;
+* distributed: otherwise, the kernel's `groupBy(shard_id).applyInPandas`
+  job, exactly what `search_batch` runs.
+
+Either way (and for `search_hybrid`) the <= k result ids are hydrated
+with one `doc_id IN (...)` scan. `served_counts()` reports how many
+requests each arm took.
 
     eng = SearchEngine(spark, index_root)           # from a StagedIndexBuild
     eng.search("spark shuffle", k=10)               # -> list of result rows
@@ -15,11 +31,29 @@ session the way Searcher's startup warmed its IDF cache
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import threading
 
+import numpy as np
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import functions as F
+
+from ..functions.analyzer import analyze
+from ..index.codec_pfd import POS_STREAMS, TF_STREAMS, term_stream_bytes
 from .bm25 import Query, bm25_topk, bm25_topk_conjunctive
-from .phrase import phrase_match
-from .wand import compute_shard_bounds, wand_topk
+from .executor import run_local
+from .phrase import phrase_match, phrase_plan
+from .proximity import proximity_plan
+from .span import span_plan
+from .wand import compute_shard_bounds, wand_plan, wand_topk
+
+# Largest request, per segment family, in bytes pulled to the driver, that
+# the eager methods serve on the local arm; negative = never. Measured
+# crossover on 4 CPUs (200K-turn index, 1 and 7 shards, 1 and 2 concurrent
+# clients): TF requests stay faster on the driver up to ~6 MB; positional
+# ones, whose kernels do far more work per byte, only up to ~300 KB with
+# two clients, because concurrent driver-side kernels share one GIL while
+# the distributed arm runs them in parallel Python workers.
+LOCAL_ARM_MAX_BYTES = {"tf": 4 << 20, "pos": 256 << 10}
 
 
 class SearchEngine:
@@ -44,6 +78,12 @@ class SearchEngine:
         (both plan-asserted)."""
         self.spark = spark
         self.use_packed = use_packed
+        self.docs = spark.read.parquet(f"{index_root}/docs/data")
+        # driver-arm sizing: term -> segment stream bytes per family,
+        # collected once when the family's frame is cached
+        self._term_bytes: dict[str, dict[str, int]] = {}
+        self._served = {"local": 0, "distributed": 0}
+        self._served_lock = threading.Lock()
         self._bucketed_tables: tuple[str, str] | None = None
         if bucketed_path is not None:
             from ..index.build import register_bucketed
@@ -91,18 +131,21 @@ class SearchEngine:
                                .parquet(f"{index_root}/merged/data")
                                .repartition(n, "shard_id").cache())
             self.packed.count()
+            self._term_bytes["tf"] = term_stream_bytes(self.packed,
+                                                       TF_STREAMS)
+            self._role_docs = {r["role"]: int(r["count"]) for r in
+                               self.docs.groupBy("role").count().collect()}
         # per-shard doc lower bounds: computed LAZILY on the first
         # role-filtered query and memoized (wand.compute_shard_bounds note)
         # — unfiltered engines never pay the bounds aggregation at all,
         # filtered ones pay one metadata-scale collect total
         self._shard_bounds: list | None = None
-        self.docs = spark.read.parquet(f"{index_root}/docs/data")
         self._index_root = index_root
         self._positions: DataFrame | None = None
         self._positions_packed: DataFrame | None = None
         self._tombstones: set[int] = set()
-        import threading
         self._tombstones_lock = threading.Lock()
+        self._positions_lock = threading.Lock()
         if not use_packed:
             self._ensure_tf()
 
@@ -182,7 +225,6 @@ class SearchEngine:
     _TOMB_ISIN_MAX = 2048
 
     def _mask_tomb(self, df: DataFrame, col: str, tomb: list[int]) -> DataFrame:
-        from pyspark.sql import functions as F
         if len(tomb) <= self._TOMB_ISIN_MAX:
             return df.where(~F.col(col).isin(tomb))
         ids = F.broadcast(self.spark.createDataFrame(
@@ -215,7 +257,6 @@ class SearchEngine:
             # cogrouped per doc-range shard, masked before scoring), so a
             # role= query serves from the SAME compressed index as every
             # other query; no second uncompressed index copy stays hot.
-            from pyspark.sql import functions as F
             allowed = self.docs.where(F.col("role") == role).select("doc_id")
             if tomb is not None and not self.use_packed:
                 # exhaustive path has no kernel mask: shrink the allowed
@@ -264,29 +305,109 @@ class SearchEngine:
         return out
 
     def _hydrate(self, out: DataFrame, score_col: str) -> DataFrame:
-        """Attach display metadata to a rank list. LEFT join: a fused
-        hybrid list may carry a vec_id with no doc row if the embeddings
-        table drifted from the doc store — better a null-snippet row (the
-        inconsistency stays visible) than silently dropped ranks. For
-        BM25 lists every doc_id exists, so left == inner there."""
-        from pyspark.sql import functions as F
+        """Attach display metadata to a lazy rank list (`search_batch`;
+        the eager methods use `_hydrate_rows`). LEFT join, so a doc
+        missing from the store keeps a null-snippet row (the
+        inconsistency stays visible) rather than a dropped rank."""
         meta = self.docs.select("doc_id", "conv_id", "turn_idx", "role",
                                 F.substring("text", 1, 80).alias("snippet"))
         return out.join(meta, "doc_id", "left").select(
             "query_id", "rank", "doc_id", score_col,
             "conv_id", "turn_idx", "role", "snippet")
 
-    def search(self, text: str, k: int = 10, hydrate: bool = True,
-               mode: str = "or", role: str | None = None) -> list:
-        # single-query serving: the driver heap merge replaces the global
-        # rank window (one fewer exchange + stage; we collect right away,
-        # so the eager semantics cost nothing)
-        fr = "driver" if self.use_packed else "window"
-        df = self.search_batch((Query("q", text, k=k),), hydrate=hydrate,
-                               mode=mode, role=role, final_rank=fr)
+    def served_counts(self) -> dict[str, int]:
+        """Eager requests served so far per arm:
+        {"local": n, "distributed": n}."""
+        with self._served_lock:
+            return dict(self._served)
+
+    def _count(self, local: bool) -> None:
+        with self._served_lock:
+            self._served["local" if local else "distributed"] += 1
+
+    def _fits_driver(self, text: str, families: tuple[str, ...],
+                     role: str | None = None) -> bool:
+        """Whether one request goes to the local arm: in each of
+        ``families``, the bytes it would pull to the driver — its
+        analyzed terms' segment stream bytes, plus 8 per allowed doc id
+        of ``role`` on the TF side — are at most that family's
+        `LOCAL_ARM_MAX_BYTES`."""
+        terms = set(analyze(text))
+        for f in families:
+            need = sum(self._term_bytes[f].get(t, 0) for t in terms)
+            if role is not None and f == "tf":
+                need += 8 * self._role_docs.get(role, 0)
+            if need > LOCAL_ARM_MAX_BYTES[f]:
+                return False
+        return True
+
+    @staticmethod
+    def _local_rows(plan, allowed: np.ndarray | None = None) -> list:
+        """Run a kernel plan on the driver (`executor.run_local`); rows
+        shaped like the distributed arm's collect."""
+        if plan is None:
+            return []
+        ranked = run_local(plan, allowed)
+        cols = list(ranked.columns)
+        return [Row(**dict(zip(cols, vals))) for vals in
+                zip(*(ranked[c].tolist() for c in cols))]
+
+    _HYDRATE_COLS = ("conv_id", "turn_idx", "role", "snippet")
+
+    def _hydrate_rows(self, rows: list) -> list:
+        """Display metadata for <= k ranked rows with one scan: a single
+        `doc_id IN (...)` SQL string (not a join against a LocalRelation,
+        and not `isin`, which costs a py4j call per literal). A doc
+        missing from the store — a fused hybrid list may carry a vec_id
+        with no doc row if the embeddings drifted from the doc store —
+        keeps null fields, as `_hydrate`'s left join does."""
+        if not rows:
+            return rows
+        ids = ",".join(str(int(r["doc_id"])) for r in rows)
+        meta = {m["doc_id"]: tuple(m)[1:] for m in
+                self.docs.where(f"doc_id IN ({ids})")
+                .select("doc_id", "conv_id", "turn_idx", "role",
+                        F.substring("text", 1, 80).alias("snippet"))
+                .collect()}
+        blank = (None,) * len(self._HYDRATE_COLS)
+        return [Row(**r.asDict(), **dict(zip(
+                    self._HYDRATE_COLS, meta.get(r["doc_id"], blank))))
+                for r in rows]
+
+    def _finish(self, rows: list, hydrate: bool) -> list:
         # client-side sort of <= k rows: an orderBy would plan a sort job
         # even over the driver path's LocalRelation
-        return sorted(df.collect(), key=lambda r: r["rank"])
+        rows = sorted(rows, key=lambda r: r["rank"])
+        return self._hydrate_rows(rows) if hydrate else rows
+
+    def search(self, text: str, k: int = 10, hydrate: bool = True,
+               mode: str = "or", role: str | None = None) -> list:
+        if mode == "proximity" and role is None:
+            return self.search_proximity(text, k=k, hydrate=hydrate)
+        q = (Query("q", text, k=k),)
+        local = (self.use_packed and mode in ("or", "and")
+                 and self._fits_driver(text, ("tf",), role))
+        if local:
+            plan = wand_plan(self.packed, q, self._corpus_stats,
+                             conjunctive=mode == "and",
+                             blocked_ids=self._tomb())
+            rows = self._local_rows(
+                plan, None if role is None else self._role_ids(role))
+        else:
+            # single-query serving: the driver heap merge replaces the
+            # global rank window (one fewer exchange + stage; we collect
+            # right away, so the eager semantics cost nothing)
+            fr = "driver" if self.use_packed else "window"
+            rows = self.search_batch(q, mode=mode, role=role,
+                                     final_rank=fr).collect()
+        self._count(local)
+        return self._finish(rows, hydrate)
+
+    def _role_ids(self, role: str) -> np.ndarray:
+        """Sorted doc ids of one role (the local arm's allowed set)."""
+        pdf = (self.docs.where(F.col("role") == role).select("doc_id")
+               .toPandas())
+        return np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
 
     def warm_hybrid(self, embeddings_path: str, ivf_root: str,
                     n_centroids: int = 8, n_probe: int = 2) -> None:
@@ -369,16 +490,13 @@ class SearchEngine:
             # would push the mask inside the IVF scan, not worth it for
             # the purge-soon tombstone window.)
             from pyspark.sql import Window
-            from pyspark.sql import functions as F
             c = (self._mask_tomb(c, "vec_id", tomb)
                  .withColumn("rank", F.row_number().over(
                      Window.partitionBy("query_vec_id")
                      .orderBy(F.col("cos").desc(), F.col("vec_id").asc()))))
         out = _fuse(self.spark, b, c, (("q", text, query_vec_id),),
                     k, RRF_K)
-        if hydrate:
-            out = self._hydrate(out, "rrf")
-        return out.orderBy("rank").collect()
+        return self._finish(out.collect(), hydrate)
 
     def _search_proximity(self, queries: tuple[Query, ...],
                           tomb: list[int] | None,
@@ -426,56 +544,78 @@ class SearchEngine:
         merged TF layout), else packed once from the row positions
         CO-SHARDED with the live packed TF index via its shard bounds
         (the alignment contract `wand_topk_proximity` requires)."""
-        if self._positions_packed is None:
-            import os
-            stage = f"{self._index_root}/positions_packed/data"
-            if os.path.isdir(stage):
-                self._positions_packed = self.spark.read.parquet(stage).cache()
-            elif self.use_packed:
-                from ..index.positions import build_packed_positions
-                if self._shard_bounds is None:
-                    self._shard_bounds = compute_shard_bounds(self.packed)
-                self._positions_packed = build_packed_positions(
-                    self._positions_df(),
-                    shard_bounds=self._shard_bounds).cache()
-            else:
-                # exhaustive engine: no TF shards to co-shard with;
-                # standalone doc-range sharding is fine for the
-                # positional-only kernels (phrase/span)
-                from ..index.positions import build_packed_positions
-                self._positions_packed = build_packed_positions(
-                    self._positions_df()).cache()
-            self._positions_packed.count()
+        with self._positions_lock:
+            if self._positions_packed is None:
+                import os
+                stage = f"{self._index_root}/positions_packed/data"
+                if os.path.isdir(stage):
+                    pos = self.spark.read.parquet(stage).cache()
+                elif self.use_packed:
+                    from ..index.positions import build_packed_positions
+                    if self._shard_bounds is None:
+                        self._shard_bounds = compute_shard_bounds(self.packed)
+                    pos = build_packed_positions(
+                        self._positions_df(),
+                        shard_bounds=self._shard_bounds).cache()
+                else:
+                    # exhaustive engine: no TF shards to co-shard with;
+                    # standalone doc-range sharding is fine for the
+                    # positional-only kernels (phrase/span)
+                    from ..index.positions import build_packed_positions
+                    pos = build_packed_positions(self._positions_df()).cache()
+                pos.count()
+                self._term_bytes["pos"] = term_stream_bytes(pos, POS_STREAMS)
+                # published last: concurrent requests wait on the lock,
+                # then see the frame and its term sizes together
+                self._positions_packed = pos
         return self._positions_packed
 
     def search_phrase(self, text: str, k: int = 10) -> list:
         """Exact phrase search; rows (rank, doc_id, n_occ). Packed
         engines serve from the compressed positional segments (per-shard
-        anchor-intersection kernel, tombstones masked in-kernel); the
-        rest use the declarative row path."""
+        anchor-intersection kernel, tombstones masked in-kernel, either
+        arm); the rest use the declarative row path."""
         tomb = self._tomb()
+        q = (Query("q", text, k=k),)
+        local = False
         if self.use_packed:
-            from .phrase import phrase_match_packed
-            df = phrase_match_packed(self.spark, self._packed_positions_df(),
-                                     (Query("q", text, k=k),),
-                                     blocked_ids=tomb)
+            pos = self._packed_positions_df()
+            local = self._fits_driver(text, ("pos",))
+            if local:
+                rows = self._local_rows(phrase_plan(pos, q,
+                                                    blocked_ids=tomb))
+            else:
+                from .phrase import phrase_match_packed
+                rows = (phrase_match_packed(self.spark, pos, q,
+                                            blocked_ids=tomb)
+                        .orderBy("rank").collect())
         else:
             pos = self._positions_df()
             if tomb is not None:
                 pos = self._mask_tomb(pos, "doc_id", tomb)
-            df = phrase_match(self.spark, pos, (Query("q", text, k=k),))
-        return df.orderBy("rank").collect()
+            rows = phrase_match(self.spark, pos, q).orderBy("rank").collect()
+        self._count(local)
+        return rows
 
     def search_near(self, text: str, k: int = 10, window: int = 8) -> list:
         """Span/near search: docs where EVERY query term occurs within a
         ``window``-token range, tightest span first; rows
         (rank, doc_id, min_span). Served from the packed positional
-        segments with tombstones masked in-kernel."""
-        from .span import span_near_match
-        df = span_near_match(self.spark, self._packed_positions_df(),
-                             (Query("q", text, k=k),), window=window,
-                             blocked_ids=self._tomb())
-        return df.orderBy("rank").collect()
+        segments with tombstones masked in-kernel, either arm."""
+        pos = self._packed_positions_df()
+        q = (Query("q", text, k=k),)
+        tomb = self._tomb()
+        local = self._fits_driver(text, ("pos",))
+        if local:
+            rows = self._local_rows(span_plan(pos, q, window=window,
+                                              blocked_ids=tomb))
+        else:
+            from .span import span_near_match
+            rows = (span_near_match(self.spark, pos, q, window=window,
+                                    blocked_ids=tomb)
+                    .orderBy("rank").collect())
+        self._count(local)
+        return rows
 
     def search_proximity(self, text: str, k: int = 10,
                          hydrate: bool = True) -> list:
@@ -483,16 +623,26 @@ class SearchEngine:
         docs whose query terms sit near each other outrank scattered
         matches. Serving twin of the batch `bm25_topk_proximity` /
         `wand_topk_proximity` entries."""
-        fr = "driver" if self.use_packed else "window"
-        df = self.search_batch((Query("q", text, k=k),), hydrate=hydrate,
-                               mode="proximity", final_rank=fr)
-        return sorted(df.collect(), key=lambda r: r["rank"])
+        q = (Query("q", text, k=k),)
+        local = False
+        if self.use_packed:
+            pos = self._packed_positions_df()
+            local = self._fits_driver(text, ("tf", "pos"))
+        if local:
+            rows = self._local_rows(proximity_plan(
+                self.packed, pos, q, self._corpus_stats,
+                blocked_ids=self._tomb()))
+        else:
+            fr = "driver" if self.use_packed else "window"
+            rows = self.search_batch(q, mode="proximity",
+                                     final_rank=fr).collect()
+        self._count(local)
+        return self._finish(rows, hydrate)
 
     def suggest(self, prefix: str, n: int = 10) -> list[str]:
         """Autocomplete: index terms under a prefix by descending document
         frequency (Searcher.java:319-337 '/words' + the frontend's prefix
         filter, server-side instead of shipping the whole vocabulary)."""
-        from pyspark.sql import functions as F
         rows = (self._ensure_term_stats()
                 .where(F.col("term").startswith(prefix.lower()))
                 .orderBy(F.col("df").desc(), F.col("term").asc())

@@ -20,11 +20,21 @@ slot it can fill and the anchor group counts DISTINCT slots.
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.analyzer import analyze
+from ..index.positions import _PSeg
 from .bm25 import Query
+from .executor import ShardPlan, blocked_array, cand_schema, run_distributed
+from .wand import _in_sorted
+
+_CAND_SCHEMA = cand_schema("n_occ", T.LongType())
 
 # Phrase query set over the sf documents vocabulary: common bigram, rare
 # trigram, repeated-term bigram, absent-term phrase (empty), single term
@@ -82,56 +92,23 @@ def phrase_match(spark: SparkSession, positions: DataFrame,
     return out.select("query_id", "rank", "doc_id", "n_occ")
 
 
-def phrase_match_packed(spark: SparkSession, packed_pos: DataFrame,
-                        queries: tuple[Query, ...] = PHRASE_QUERY_SET,
-                        stem: bool = True,
-                        blocked_ids=None) -> DataFrame:
-    """`phrase_match` served from the PACKED positional index
-    (`index/positions.py`): rank-identical to the declarative row path
-    (test-enforced), but the scan is per-(term, doc-shard) varint blobs
-    pruned to the query terms by literal IN-list — no O(occurrence) row
-    join anywhere.
-
-    Distributed shape mirrors `wand.wand_topk`: one Arrow group per
-    doc-range shard (shards partition the doc space, so per-shard exact
-    top-k union-ed then globally ranked is exact). Inside a shard: the
-    candidate docs are the intersection of the distinct phrase terms'
-    doc lists (gap streams only — positions stay encoded), then each
-    candidate's anchors are the intersection over slots i of
-    (positions(t_i) - i), decoding ONLY the position blocks that hold
-    candidates. ``blocked_ids`` (query-time tombstones) drops candidates
-    before any position decode, same LSM discipline as `wand_topk`.
-    """
-    import functools
-
-    import numpy as np
-    import pandas as pd
-
-    from ..index.packed import _as_sorted_ids
-    from ..index.positions import _PSeg
-    from .wand import _in_sorted
-
+def phrase_plan(packed_pos: DataFrame, queries: tuple[Query, ...],
+                stem: bool = True, blocked_ids=None) -> ShardPlan | None:
+    """`phrase_match_packed` as an `executor.ShardPlan`: the phrase terms'
+    positional segments, the anchor-intersection shard kernel, rank by
+    n_occ desc. None when no query has an analyzed term."""
     qrows = phrase_terms(queries, stem=stem)
     if not qrows:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, n_occ long")
+        return None
     metas = {}  # query_id -> (slots [(i, term)], k)
     for q in queries:
         slots = [(i, t) for qq, i, t in qrows if qq == q.query_id]
         if slots:
             metas[q.query_id] = (slots, q.k)
     term_list = sorted({t for _, _, t in qrows})
-    sel = packed_pos.where(F.col("term").isin(term_list))
+    blocked = blocked_array(blocked_ids)
 
-    blocked = None
-    if blocked_ids is not None:
-        blocked = _as_sorted_ids(blocked_ids)
-        if blocked.size == 0:
-            blocked = None
-
-    out_schema = ("query_id string, doc_id long, n_occ long, k int")
-
-    def shard_fn(pdf):
+    def shard_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         segs = {r.term: _PSeg(r) for r in pdf.itertuples(index=False)}
         out_q, out_d, out_n, out_k = [], [], [], []
         for query_id, (slots, k) in metas.items():
@@ -176,12 +153,36 @@ def phrase_match_packed(spark: SparkSession, packed_pos: DataFrame,
                              "n_occ": np.concatenate(out_n),
                              "k": np.array(out_k, dtype="int32")})
 
-    cands = sel.groupBy("shard_id").applyInPandas(shard_fn, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("n_occ").desc(),
-                                               F.col("doc_id").asc())
-    out = (cands.withColumn("rank", F.row_number().over(w))
-           .where(F.col("rank") <= F.col("k")))
-    return out.select("query_id", "rank", "doc_id", "n_occ")
+    return ShardPlan((packed_pos.where(F.col("term").isin(term_list)),),
+                     shard_fn, _CAND_SCHEMA, "n_occ", True)
+
+
+def phrase_match_packed(spark: SparkSession, packed_pos: DataFrame,
+                        queries: tuple[Query, ...] = PHRASE_QUERY_SET,
+                        stem: bool = True,
+                        blocked_ids=None) -> DataFrame:
+    """`phrase_match` served from the PACKED positional index
+    (`index/positions.py`): rank-identical to the declarative row path
+    (test-enforced), but the scan is per-(term, doc-shard) varint blobs
+    pruned to the query terms by literal IN-list — no O(occurrence) row
+    join anywhere.
+
+    Distributed shape mirrors `wand.wand_topk`: one Arrow group per
+    doc-range shard (shards partition the doc space, so per-shard exact
+    top-k union-ed then globally ranked is exact). Inside a shard: the
+    candidate docs are the intersection of the distinct phrase terms'
+    doc lists (gap streams only — positions stay encoded), then each
+    candidate's anchors are the intersection over slots i of
+    (positions(t_i) - i), decoding ONLY the position blocks that hold
+    candidates. ``blocked_ids`` (query-time tombstones) drops candidates
+    before any position decode, same LSM discipline as `wand_topk`.
+    """
+    plan = phrase_plan(packed_pos, queries, stem=stem,
+                       blocked_ids=blocked_ids)
+    if plan is None:
+        return spark.createDataFrame(
+            [], "query_id string, rank int, doc_id long, n_occ long")
+    return run_distributed(spark, plan)
 
 
 def phrase_count_pandas(docs_terms: list[list[str]], phrase_text: str,

@@ -27,8 +27,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..index.positions import _PSeg
 from .bm25 import (DEFAULT_QUERY_SET, Query, _bm25_raw_scores,
                    analyzed_query_terms)
+from .executor import ShardPlan, blocked_array, run_distributed
+from .wand import CAND_SCHEMA, _shard_topk, per_query_terms
 
 PROX_W = 1.0  # bonus weight: one adjacent pair ~ one strong BM25 term
 
@@ -94,64 +97,20 @@ def _min_pair_dist(x: np.ndarray, y: np.ndarray) -> int:
     return int(np.minimum(lo, hi).min())
 
 
-def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
-                        packed_pos: DataFrame, doc_stats: DataFrame,
-                        queries: tuple[Query, ...] = DEFAULT_QUERY_SET,
-                        stem: bool = True, w: float = PROX_W,
-                        round_scores: int | None = 6,
-                        corpus_stats: tuple[int, float] | None = None,
-                        blocked_ids=None,
-                        final_rank: str = "window") -> DataFrame:
-    """`bm25_topk_proximity` served from the COMPRESSED indexes: packed
-    TF segments (`index/packed.py`) cogrouped per doc-range shard with
-    packed positional segments (`index/positions.py`). Rank-identical to
-    the declarative row path (test-enforced; same rounded-score-desc,
-    doc-id-asc discipline), one Spark job warm.
-
-    REQUIRES the two packed tables to share the shard_id mapping — build
-    the positional side with ``build_packed_positions(shard_bounds=
-    compute_shard_bounds(packed))`` so positions co-shard with the TF
-    layout (merge levels included); the kernel then sees both halves of
-    a doc range in one Arrow group with no row-level join. The contract
-    is GUARDED: a shard group whose two sides cover disjoint doc ranges
-    (the mismatched-span symptom) raises instead of silently scoring
-    every bonus as 0.
-
-    Pruning stays sound under the bonus: a doc's proximity bonus is at
-    most ``w * C(m, 2)`` for m query terms (each pair contributes <= 1),
-    so MaxScore's remaining-bound and block-max tests carry that slack
-    while theta stays the k-th best *BM25-only* pool score — a lower
-    bound of the k-th best final score, since the bonus is non-negative.
-    Surviving candidates decode ONLY the position blocks that hold them
-    (`_PSeg.lists_for`); the exact bonus then reranks the pool.
-
-    ``blocked_ids``: query-time tombstones, dropped at candidate decode
-    (same LSM discipline as `wand_topk`).
-    """
-    from ..index.packed import _as_sorted_ids
-    from ..index.positions import _PSeg
-    from .wand import _shard_topk, rank_candidates, CAND_SCHEMA
-
+def proximity_plan(packed: DataFrame, packed_pos: DataFrame,
+                   queries: tuple[Query, ...],
+                   corpus_stats: tuple[int, float], stem: bool = True,
+                   w: float = PROX_W, round_scores: int | None = 6,
+                   blocked_ids=None) -> ShardPlan | None:
+    """`wand_topk_proximity` as an `executor.ShardPlan`: the query terms'
+    TF and positional segments (cogrouped per shard), the MaxScore kernel
+    with the bonus rerank, rank by rounded score desc. None when no query
+    has an analyzed term."""
     qrows = analyzed_query_terms(queries, stem=stem)
-    if corpus_stats is None:
-        stats = doc_stats.collect()[0]
-        corpus_stats = (int(stats["n_docs"]), float(stats["avgdl"]))
-    n_docs, avgdl = corpus_stats
     term_list = sorted({t for _, t, _ in qrows})
     if not term_list:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, score double")
-    per_query: dict[str, tuple[list, int]] = {}
-    for query_id, term, k in qrows:
-        per_query.setdefault(query_id, ([], k))
-        per_query[query_id][0].append(term)
-    queries_meta = [(q, ts, k) for q, (ts, k) in per_query.items()]
-
-    blocked = None
-    if blocked_ids is not None:
-        blocked = _as_sorted_ids(blocked_ids)
-        if blocked.size == 0:
-            blocked = None
+        return None
+    n_docs, avgdl = corpus_stats
 
     def bonus_rerank(query_id, present_terms, docs, scores, psegs):
         """Exact pairwise-min-distance bonus for the surviving pool
@@ -172,8 +131,8 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
 
     # ONE kernel with wand: _shard_topk's disjunctive MaxScore branch,
     # prune tests widened by the bonus slack, pool reranked exactly
-    base = _shard_topk(queries_meta, n_docs, avgdl, round_scores,
-                       blocked=blocked,
+    base = _shard_topk(per_query_terms(qrows), n_docs, avgdl, round_scores,
+                       blocked=blocked_array(blocked_ids),
                        bound_slack=lambda m: w * m * (m - 1) / 2.0,
                        pool_rerank=bonus_rerank)
 
@@ -211,12 +170,54 @@ def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
                     "group); build them with build_packed_positions("
                     "shard_bounds=compute_shard_bounds(packed))")
         psegs = {r.term: _PSeg(r) for r in right.itertuples(index=False)}
-        return base(left, psegs)
+        return base(left, ctx=psegs)
 
-    sel_tf = packed.where(F.col("term").isin(term_list))
-    sel_pos = packed_pos.where(F.col("term").isin(term_list))
-    cands = (sel_tf.groupBy("shard_id")
-             .cogroup(sel_pos.groupBy("shard_id"))
-             .applyInPandas(shard_fn, CAND_SCHEMA))
-    return rank_candidates(spark, cands, round_scores, final_rank,
-                           {q: k for q, (_, k) in per_query.items()})
+    return ShardPlan((packed.where(F.col("term").isin(term_list)),
+                      packed_pos.where(F.col("term").isin(term_list))),
+                     shard_fn, CAND_SCHEMA, "score", True, round_scores)
+
+
+def wand_topk_proximity(spark: SparkSession, packed: DataFrame,
+                        packed_pos: DataFrame, doc_stats: DataFrame,
+                        queries: tuple[Query, ...] = DEFAULT_QUERY_SET,
+                        stem: bool = True, w: float = PROX_W,
+                        round_scores: int | None = 6,
+                        corpus_stats: tuple[int, float] | None = None,
+                        blocked_ids=None,
+                        final_rank: str = "window") -> DataFrame:
+    """`bm25_topk_proximity` served from the COMPRESSED indexes: packed
+    TF segments (`index/packed.py`) cogrouped per doc-range shard with
+    packed positional segments (`index/positions.py`). Rank-identical to
+    the declarative row path (test-enforced; same rounded-score-desc,
+    doc-id-asc discipline), one Spark job warm.
+
+    REQUIRES the two packed tables to share the shard_id mapping — build
+    the positional side with ``build_packed_positions(shard_bounds=
+    compute_shard_bounds(packed))`` so positions co-shard with the TF
+    layout (merge levels included); the kernel then sees both halves of
+    a doc range in one Arrow group with no row-level join. The contract
+    is GUARDED: a shard group whose two sides cover disjoint doc ranges
+    (the mismatched-span symptom) raises instead of silently scoring
+    every bonus as 0.
+
+    Pruning stays sound under the bonus: a doc's proximity bonus is at
+    most ``w * C(m, 2)`` for m query terms (each pair contributes <= 1),
+    so MaxScore's remaining-bound and block-max tests carry that slack
+    while theta stays the k-th best *BM25-only* pool score — a lower
+    bound of the k-th best final score, since the bonus is non-negative.
+    Surviving candidates decode ONLY the position blocks that hold them
+    (`_PSeg.lists_for`); the exact bonus then reranks the pool.
+
+    ``blocked_ids``: query-time tombstones, dropped at candidate decode
+    (same LSM discipline as `wand_topk`).
+    """
+    if corpus_stats is None:
+        stats = doc_stats.collect()[0]
+        corpus_stats = (int(stats["n_docs"]), float(stats["avgdl"]))
+    plan = proximity_plan(packed, packed_pos, queries, corpus_stats,
+                          stem=stem, w=w, round_scores=round_scores,
+                          blocked_ids=blocked_ids)
+    if plan is None:
+        return spark.createDataFrame(
+            [], "query_id string, rank int, doc_id long, score double")
+    return run_distributed(spark, plan, final_rank)

@@ -20,7 +20,7 @@ Distributed shape: identical to `phrase.phrase_match_packed` — literal
 term IN-list prunes the packed positional segments, one Arrow group per
 doc-range shard, candidate docs intersect on gap streams alone, only
 the position blocks holding candidates decode, per-shard top-k then the
-global rank window (shards partition the doc space, so this is exact).
+global rank (shards partition the doc space, so this is exact).
 """
 
 from __future__ import annotations
@@ -29,10 +29,16 @@ import functools
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..index.positions import _PSeg
 from .bm25 import Query, analyzed_query_terms
+from .executor import ShardPlan, blocked_array, cand_schema, run_distributed
+from .wand import _in_sorted, per_query_terms
+
+_CAND_SCHEMA = cand_schema("min_span", T.LongType())
 
 DEFAULT_WINDOW = 8
 
@@ -80,43 +86,24 @@ def _min_span(lists: list[np.ndarray]) -> int:
     return int(best)
 
 
-def span_near_match(spark: SparkSession, packed_pos: DataFrame,
-                    queries: tuple[Query, ...] = SPAN_QUERY_SET,
-                    window: int = DEFAULT_WINDOW,
-                    stem: bool = True,
-                    blocked_ids=None) -> DataFrame:
-    """Top-k near-matches per query: (query_id, rank, doc_id, min_span),
-    min_span < window, ranked (min_span ASC, doc_id ASC).
-
-    ``blocked_ids``: query-time tombstones, dropped before any position
-    decode (same LSM discipline as the phrase/WAND kernels)."""
-    from ..index.packed import _as_sorted_ids
-    from ..index.positions import _PSeg
-    from .wand import _in_sorted
-
+def span_plan(packed_pos: DataFrame, queries: tuple[Query, ...],
+              window: int = DEFAULT_WINDOW, stem: bool = True,
+              blocked_ids=None) -> ShardPlan | None:
+    """`span_near_match` as an `executor.ShardPlan`: the query terms'
+    positional segments, the sliding-window shard kernel, rank by
+    min_span asc. None when no query has an analyzed term."""
     qrows = analyzed_query_terms(queries, stem=stem)
     if not qrows:
-        return spark.createDataFrame(
-            [], "query_id string, rank int, doc_id long, min_span long")
-    per_query: dict[str, tuple[list, int]] = {}
-    for query_id, term, k in qrows:
-        per_query.setdefault(query_id, ([], k))
-        per_query[query_id][0].append(term)
+        return None
+    per_query = per_query_terms(qrows)
     term_list = sorted({t for _, t, _ in qrows})
-    sel = packed_pos.where(F.col("term").isin(term_list))
-
-    blocked = None
-    if blocked_ids is not None:
-        blocked = _as_sorted_ids(blocked_ids)
-        if blocked.size == 0:
-            blocked = None
-
+    blocked = blocked_array(blocked_ids)
     w_lim = int(window)
 
     def shard_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         segs = {r.term: _PSeg(r) for r in pdf.itertuples(index=False)}
         out_q, out_d, out_s, out_k = [], [], [], []
-        for query_id, (terms, k) in per_query.items():
+        for query_id, terms, k in per_query:
             uniq = sorted(set(terms))
             if any(t not in segs for t in uniq) or k <= 0:
                 continue  # a term absent from this shard -> no match here
@@ -153,13 +140,26 @@ def span_near_match(spark: SparkSession, packed_pos: DataFrame,
                              "min_span": np.concatenate(out_s),
                              "k": np.array(out_k, dtype="int32")})
 
-    cands = sel.groupBy("shard_id").applyInPandas(
-        shard_fn, "query_id string, doc_id long, min_span long, k int")
-    win = Window.partitionBy("query_id").orderBy(F.col("min_span").asc(),
-                                                 F.col("doc_id").asc())
-    out = (cands.withColumn("rank", F.row_number().over(win))
-           .where(F.col("rank") <= F.col("k")))
-    return out.select("query_id", "rank", "doc_id", "min_span")
+    return ShardPlan((packed_pos.where(F.col("term").isin(term_list)),),
+                     shard_fn, _CAND_SCHEMA, "min_span", False)
+
+
+def span_near_match(spark: SparkSession, packed_pos: DataFrame,
+                    queries: tuple[Query, ...] = SPAN_QUERY_SET,
+                    window: int = DEFAULT_WINDOW,
+                    stem: bool = True,
+                    blocked_ids=None) -> DataFrame:
+    """Top-k near-matches per query: (query_id, rank, doc_id, min_span),
+    min_span < window, ranked (min_span ASC, doc_id ASC).
+
+    ``blocked_ids``: query-time tombstones, dropped before any position
+    decode (same LSM discipline as the phrase/WAND kernels)."""
+    plan = span_plan(packed_pos, queries, window=window, stem=stem,
+                     blocked_ids=blocked_ids)
+    if plan is None:
+        return spark.createDataFrame(
+            [], "query_id string, rank int, doc_id long, min_span long")
+    return run_distributed(spark, plan)
 
 
 def span_count_pandas(docs_terms: list[list[str]], query_text: str,

@@ -30,30 +30,16 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..index.packed import _as_sorted_ids
 from ..index.codec import (BLOCK, K1, block_ends_array, decode_postings,
                            tf_norm, varint_decode)
 from .bm25 import DEFAULT_QUERY_SET, Query, analyzed_query_terms
+from .executor import ShardPlan, blocked_array, cand_schema, run_distributed
 
-_RANKED_SCHEMA = T.StructType([
-    T.StructField("query_id", T.StringType(), False),
-    T.StructField("rank", T.IntegerType(), False),
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("score", T.DoubleType(), False),
-])
-
-CAND_SCHEMA = T.StructType([
-    T.StructField("query_id", T.StringType(), False),
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("score", T.DoubleType(), False),
-    # per-query k rides with every candidate row so the final rank filter
-    # needs no extra broadcast join (one fewer stage on the serving path)
-    T.StructField("k", T.IntegerType(), False),
-])
+CAND_SCHEMA = cand_schema("score", T.DoubleType())
 
 
 class _Seg:
@@ -212,24 +198,24 @@ def compute_shard_bounds(packed: DataFrame) -> list[tuple[int, int]]:
 
 def _shard_topk(queries_meta: list[tuple[str, list[str], int]],
                 n_docs: int, avgdl: float, round_scores: int | None,
-                conjunctive: bool = False, filtered: bool = False,
-                eager_decode: bool = False,
+                conjunctive: bool = False,
                 blocked: np.ndarray | None = None,
                 bound_slack=None, pool_rerank=None):
-    """applyInPandas fn: one doc-shard's segments -> per-query top-k
-    candidates. queries_meta: (query_id, terms, k); idf comes from the
+    """Shard function ``run(pdf, allowed=None, ctx=None)``: one
+    doc-shard's segments -> per-query top-k candidates (CAND_SCHEMA).
+    queries_meta: (query_id, terms, k); idf comes from the
     segments' stored global_df. ``conjunctive=True`` = AND semantics:
     sorted-array posting-list intersection (a doc's postings for every term
     live in the same doc-range shard, so per-shard intersection is exact).
 
-    ``filtered=True`` returns a COGROUP fn (segments, allowed-doc rows):
-    candidates are masked against the shard's sorted allowed-doc array the
-    moment they are decoded, BEFORE any scoring or theta seeding — the
-    MaxScore bounds stay sound because theta is then the k-th best among
-    allowed docs only, and every upper bound still dominates every doc,
-    allowed included. Corpus statistics (idf, avgdl) stay global: standard
-    filtered-search semantics, rank-identical to `bm25.bm25_topk` with
-    ``allowed_docs`` (test-enforced).
+    ``allowed`` (a sorted int64 array of allowed doc ids; role filters):
+    candidates are masked against it the moment they are decoded, BEFORE
+    any scoring or theta seeding — the MaxScore bounds stay sound because
+    theta is then the k-th best among allowed docs only, and every upper
+    bound still dominates every doc, allowed included. Corpus statistics
+    (idf, avgdl) stay global: standard filtered-search semantics,
+    rank-identical to `bm25.bm25_topk` with ``allowed_docs``
+    (test-enforced).
 
     ``blocked`` (a sorted int64 array riding the closure — tombstones, so
     metadata-scale by the LSM discipline: `packed.purge_docs` folds them
@@ -250,18 +236,11 @@ def _shard_topk(queries_meta: list[tuple[str, list[str], int]],
     kernel, every prune fix lands on both paths."""
     eps = 10.0 ** (-round_scores) if round_scores is not None else 0.0
 
-    def run(pdf: pd.DataFrame, allowed: np.ndarray | None,
+    def run(pdf: pd.DataFrame, allowed: np.ndarray | None = None,
             ctx=None) -> pd.DataFrame:
         segs: dict[str, _Seg] = {}
         for r in pdf.itertuples(index=False):
             segs[r.term] = _Seg(r, n_docs, avgdl)
-        if eager_decode:
-            # A/B knob (tools/wand_ab.py): decode every selected segment up
-            # front — disables lazy block decode AND block-max pruning (the
-            # `_full is None` guard), isolating the offset path's overhead
-            # on corpora where pruning is inert (near-constant dl)
-            for s in segs.values():
-                s.full()
         out_q, out_d, out_s = [], [], []
         for query_id, qterms, k in queries_meta:
             terms = [(t, segs[t]) for t in qterms if t in segs]
@@ -389,16 +368,36 @@ def _shard_topk(queries_meta: list[tuple[str, list[str], int]],
                              "k": np.array([k for _, k in out_q],
                                            dtype="int32")})
 
-    if filtered:
-        def fn_cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            allowed = np.sort(right["doc_id"].to_numpy(dtype=np.int64))
-            return run(left, allowed)
-        return fn_cogroup
+    return run
 
-    def fn(pdf: pd.DataFrame, ctx=None) -> pd.DataFrame:
-        return run(pdf, None, ctx)
 
-    return fn
+def per_query_terms(qrows: list[tuple[str, str, int]]
+                    ) -> list[tuple[str, list[str], int]]:
+    """`analyzed_query_terms` rows grouped per query: (query_id, terms,
+    k) — the ``queries_meta`` the shard kernels take."""
+    per_query: dict[str, tuple[list, int]] = {}
+    for query_id, term, k in qrows:
+        per_query.setdefault(query_id, ([], k))[0].append(term)
+    return [(q, ts, k) for q, (ts, k) in per_query.items()]
+
+
+def wand_plan(packed: DataFrame, queries: tuple[Query, ...],
+              corpus_stats: tuple[int, float], stem: bool = True,
+              round_scores: int | None = 6, conjunctive: bool = False,
+              blocked_ids=None) -> ShardPlan | None:
+    """`wand_topk` as an `executor.ShardPlan`: the query terms' packed
+    segments, the MaxScore shard kernel, rank by rounded score desc.
+    None when no query has an analyzed term."""
+    qrows = analyzed_query_terms(queries, stem=stem)
+    term_list = sorted({t for _, t, _ in qrows})
+    if not term_list:
+        return None
+    n_docs, avgdl = corpus_stats
+    fn = _shard_topk(per_query_terms(qrows), n_docs, avgdl, round_scores,
+                     conjunctive=conjunctive,
+                     blocked=blocked_array(blocked_ids))
+    return ShardPlan((packed.where(F.col("term").isin(term_list)),), fn,
+                     CAND_SCHEMA, "score", True, round_scores)
 
 
 def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
@@ -409,7 +408,6 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
               conjunctive: bool = False,
               allowed_docs: DataFrame | None = None,
               shard_bounds: list[tuple[int, int]] | None = None,
-              eager_decode: bool = False,
               blocked_ids=None,
               final_rank: str = "window") -> DataFrame:
     """Exact BM25 top-k via per-shard MaxScore over the packed index.
@@ -439,48 +437,20 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
     (8 bytes per id) instead of a cogroup; composes with
     ``allowed_docs``.
 
-    ``final_rank`` picks the global-rank strategy over the per-shard
-    candidates (<= shards x k rows either way):
-    * ``"window"`` (default): a Window.partitionBy(query_id) rank — stays
-      lazy/composable, costs one exchange + stage per request.
-    * ``"driver"``: collect the candidates and merge driver-side with the
-      IDENTICAL (rounded score desc, doc_id asc) ordering — the reference
-      Searcher's own shape (`jobs/Searcher.java:234-244`, a PriorityQueue
-      over fetched postings) at metadata scale. One fewer stage per warm
-      query; rank-identity to the window path is test-enforced. EAGER
-      (runs the job at call time) — meant for serving, where the caller
-      collects immediately anyway.
+    ``final_rank`` (``"window"`` or ``"driver"``) picks the global-rank
+    strategy over the per-shard candidates; see
+    `executor.run_distributed`.
     """
-    if final_rank not in ("window", "driver"):
-        raise ValueError(f"final_rank must be 'window' or 'driver', "
-                         f"got {final_rank!r}")
-    qrows = analyzed_query_terms(queries, stem=stem)
     if corpus_stats is None:
         stats = doc_stats.collect()[0]
         corpus_stats = (int(stats["n_docs"]), float(stats["avgdl"]))
-    n_docs, avgdl = corpus_stats
-    term_list = sorted({t for _, t, _ in qrows})
-    if not term_list:
+    plan = wand_plan(packed, queries, corpus_stats, stem=stem,
+                     round_scores=round_scores, conjunctive=conjunctive,
+                     blocked_ids=blocked_ids)
+    if plan is None:
         return spark.createDataFrame(
             [], "query_id string, rank int, doc_id long, score double")
-    sel = packed.where(F.col("term").isin(term_list))
-    per_query: dict[str, tuple[list, int]] = {}
-    for query_id, term, k in qrows:
-        per_query.setdefault(query_id, ([], k))
-        per_query[query_id][0].append(term)
-    queries_meta = [(q, ts, k) for q, (ts, k) in per_query.items()]
-
-    blocked = None
-    if blocked_ids is not None:
-        blocked = _as_sorted_ids(blocked_ids)
-        if blocked.size == 0:
-            blocked = None
-    fn = _shard_topk(queries_meta, n_docs, avgdl, round_scores,
-                     conjunctive=conjunctive,
-                     filtered=allowed_docs is not None,
-                     eager_decode=eager_decode,
-                     blocked=blocked)
-
+    allowed = None
     if allowed_docs is not None:
         # Per-shard doc lower bounds: tiny (one row per shard after the agg
         # — metadata-scale, like a partition listing), collected once and
@@ -494,9 +464,7 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
         # assigned to a shard with no selected segments lands in a
         # right-only cogroup, whose empty segment side scores nothing.
         bounds = (sorted(shard_bounds) if shard_bounds is not None else
-                  sorted((int(r["lo"]), int(r["shard_id"])) for r in
-                         sel.groupBy("shard_id")
-                         .agg(F.min("first_doc").alias("lo")).collect()))
+                  compute_shard_bounds(plan.frames[0]))
         los = np.array([lo for lo, _ in bounds], dtype=np.int64)
         sids = np.array([s for _, s in bounds], dtype=np.int32)
 
@@ -508,86 +476,6 @@ def wand_topk(spark: SparkSession, packed: DataFrame, doc_stats: DataFrame,
                 yield pd.DataFrame({"shard_id": sids[idx[keep]],
                                     "doc_id": d[keep]})
 
-        allowed_sharded = (allowed_docs.select(F.col("doc_id").cast("long"))
-                           .mapInPandas(assign, "shard_id int, doc_id long"))
-
-        def fn_cog(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            return fn(left, right)
-
-        cands = (sel.groupBy("shard_id")
-                 .cogroup(allowed_sharded.groupBy("shard_id"))
-                 .applyInPandas(fn_cog, CAND_SCHEMA))
-    else:
-        def fn_typed(pdf: pd.DataFrame) -> pd.DataFrame:
-            return fn(pdf)
-
-        cands = sel.groupBy("shard_id").applyInPandas(fn_typed, CAND_SCHEMA)
-    return rank_candidates(spark, cands, round_scores, final_rank,
-                           {q: k for q, (_, k) in per_query.items()})
-
-
-def rank_candidates(spark: SparkSession, cands: DataFrame,
-                    round_scores: int | None, final_rank: str,
-                    ks: dict[str, int]) -> DataFrame:
-    """Shared tail of every packed-kernel retrieval path: round the
-    per-shard candidates' scores, then produce the global per-query
-    top-k — either as the lazy rank window or the driver-side heap merge
-    (see `wand_topk`'s ``final_rank``)."""
-    if final_rank not in ("window", "driver"):
-        raise ValueError(f"final_rank must be 'window' or 'driver', "
-                         f"got {final_rank!r}")
-    score = F.round(F.col("score"), round_scores) if round_scores is not None \
-        else F.col("score")
-    scored = cands.withColumn("score", score)
-    if final_rank == "driver":
-        return _driver_rank(spark, scored, ks)
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                               F.col("doc_id").asc())
-    out = (scored.withColumn("rank", F.row_number().over(w))
-           .where(F.col("rank") <= F.col("k")))
-    return out.select("query_id", "rank", "doc_id", "score")
-
-
-def _driver_rank(spark: SparkSession, scored: DataFrame,
-                 ks: dict[str, int]) -> DataFrame:
-    """Collect per-shard candidates (metadata-scale: <= shards x k rows,
-    scores already rounded) and produce the global top-k per query with
-    the engine-wide (score desc, doc_id asc) ordering — the final rank
-    without the per-request exchange + window stage."""
-    rows = scored.select("query_id", "doc_id", "score").collect()
-    by_q: dict[str, list] = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(
-            (-float(r["score"]), int(r["doc_id"])))
-    out_q: list[str] = []
-    out_r: list[int] = []
-    out_d: list[int] = []
-    out_s: list[float] = []
-    for q, cand in by_q.items():
-        cand.sort()
-        for rank, (neg, doc) in enumerate(cand[:ks.get(q, 0)], start=1):
-            out_q.append(q)
-            out_r.append(rank)
-            out_d.append(doc)
-            out_s.append(-neg)
-    # pandas input -> Arrow LocalRelation: a list input would round-trip
-    # through sc.parallelize and every downstream collect would schedule a
-    # defaultParallelism-task job (measured ~0.3 s vs ~0.02 s for the
-    # LocalRelation — more than the exchange this mode exists to save).
-    # An EMPTY pandas frame falls off the Arrow path (LogicalRDD with
-    # defaultParallelism empty partitions — a 32-task job per collect, as
-    # is createDataFrame([], schema)); a one-row LocalRelation filtered
-    # to WHERE false constant-folds to an empty LocalRelation instead
-    # (driver-only collect, ~0.05 s vs ~0.4 s measured).
-    if not out_q:
-        one = pd.DataFrame({"query_id": ["x"],
-                            "rank": pd.Series([1], dtype="int32"),
-                            "doc_id": pd.Series([0], dtype="int64"),
-                            "score": pd.Series([0.0], dtype="float64")})
-        return (spark.createDataFrame(one, schema=_RANKED_SCHEMA)
-                .where(F.lit(False)))
-    pdf = pd.DataFrame({"query_id": pd.Series(out_q, dtype="str"),
-                        "rank": pd.Series(out_r, dtype="int32"),
-                        "doc_id": pd.Series(out_d, dtype="int64"),
-                        "score": pd.Series(out_s, dtype="float64")})
-    return spark.createDataFrame(pdf, schema=_RANKED_SCHEMA)
+        allowed = (allowed_docs.select(F.col("doc_id").cast("long"))
+                   .mapInPandas(assign, "shard_id int, doc_id long"))
+    return run_distributed(spark, plan, final_rank, allowed)

@@ -4,12 +4,14 @@ exhaustive parity, and the skew bound on packed segment sizes."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from mini_distributed_search_engine_spark.index.build import build_index
 from mini_distributed_search_engine_spark.index.packed import build_packed_postings
 from mini_distributed_search_engine_spark.plans.pipeline import StagedIndexBuild
 from mini_distributed_search_engine_spark.query.bm25 import Query
+from mini_distributed_search_engine_spark.query import engine as engine_mod
 from mini_distributed_search_engine_spark.query.engine import SearchEngine
 from mini_distributed_search_engine_spark.sources.transcripts import (
     synthesize_transcripts_pdf)
@@ -237,6 +239,11 @@ def test_engine_hybrid_matches_batch_hybrid(spark, index_root, tmp_path):
     # hydrated variant carries display metadata
     hyd = eng.search_hybrid("apple banana", query_vec_id=3, k=5)
     assert hyd and {"conv_id", "snippet", "rrf"} <= set(hyd[0].asDict())
+    assert [(r["rank"], r["doc_id"], r["rrf"]) for r in hyd] == g[:5]
+    meta = {r["doc_id"]: (r["conv_id"], r["turn_idx"], r["role"])
+            for r in eng.docs.collect()}
+    assert all(meta.get(r["doc_id"], (None,) * 3)
+               == (r["conv_id"], r["turn_idx"], r["role"]) for r in hyd)
 
 
 def test_engine_packed_bucketed_no_warmup_shuffle(spark, index_root,
@@ -422,3 +429,106 @@ def test_pipeline_positions_packed_stage(spark, tmp_path_factory):
     assert ([(r["rank"], r["doc_id"], r["n_occ"]) for r in rows_f]
             == [(r["rank"], r["doc_id"], r["n_occ"]) for r in
                 exact.search_phrase("apple banana", k=5)])
+
+
+def _near_reference(eng, text: str, k: int, window: int, tomb: set):
+    """Brute-force span search over the doc store's analyzed texts."""
+    from mini_distributed_search_engine_spark.functions.analyzer import (
+        analyze)
+    from mini_distributed_search_engine_spark.query.span import (
+        span_count_pandas)
+    docs = sorted((r["doc_id"], r["text"])
+                  for r in eng.docs.select("doc_id", "text").collect())
+    spans = span_count_pandas([analyze(t) for _, t in docs], text)
+    hits = sorted(((s, d) for (d, _), s in zip(docs, spans)
+                   if s is not None and s < window and d not in tomb))
+    return [(i, d, s) for i, (s, d) in enumerate(hits[:k], start=1)]
+
+
+_ROUTES = {  # route -> (call on an engine, value column of its rows)
+    "or": (lambda e: e.search("apple banana", k=20, hydrate=False), "score"),
+    "and": (lambda e: e.search("apple banana", k=20, hydrate=False,
+                               mode="and"), "score"),
+    "role": (lambda e: e.search("apple banana", k=20, hydrate=False,
+                                role="user"), "score"),
+    "phrase": (lambda e: e.search_phrase("apple banana", k=20), "n_occ"),
+    "near": (lambda e: e.search_near("apple banana", k=20, window=10),
+             "min_span"),
+    "proximity": (lambda e: e.search_proximity("apple banana", k=20,
+                                               hydrate=False), "score"),
+}
+
+
+def _with_switch_point(monkeypatch, value: int, fn):
+    """Run ``fn`` with the engine's local-arm switch point at ``value``
+    bytes in every segment family (negative: every request
+    distributed)."""
+    with monkeypatch.context() as m:
+        m.setattr(engine_mod, "LOCAL_ARM_MAX_BYTES",
+                  {"tf": value, "pos": value})
+        return fn()
+
+
+@pytest.mark.parametrize("tombstones", [False, True])
+def test_engine_two_arm_parity(spark, index_root, tombstones,
+                               monkeypatch):
+    """Every eager route gives the same rows on the local arm (the
+    fixture's segments fit under the default switch point), the
+    distributed arm (switch point -1) and the exhaustive reference, with
+    and without tombstones; the engine counts each request under its
+    arm."""
+    eng = SearchEngine(spark, index_root)
+    exact = SearchEngine(spark, index_root, use_packed=False)
+    tomb: set[int] = set()
+    if tombstones:
+        base = eng.search("apple banana", k=3, hydrate=False)
+        tomb = {r["doc_id"] for r in base}
+        near = eng.search_near("apple banana", k=1, window=10)
+        tomb |= {r["doc_id"] for r in near}
+        eng.delete_docs(tomb)
+        exact.delete_docs(tomb)
+    for route, (call, value) in _ROUTES.items():
+        before = eng.served_counts()
+        local = call(eng)
+        mid = eng.served_counts()
+        dist = _with_switch_point(monkeypatch, -1, lambda: call(eng))
+        after = eng.served_counts()
+        assert mid["local"] == before["local"] + 1, route
+        assert after["distributed"] == mid["distributed"] + 1, route
+        got = [(r["rank"], r["doc_id"], r[value]) for r in local]
+        assert got == [(r["rank"], r["doc_id"], r[value]) for r in dist], \
+            route
+        if route == "near":
+            want = _near_reference(eng, "apple banana", 20, 10, tomb)
+        else:
+            want = [(r["rank"], r["doc_id"], r[value]) for r in call(exact)]
+        assert got == want, route
+        assert got or route in ("and", "phrase"), route
+        assert not {d for _, d, _ in got} & tomb, route
+
+
+def test_engine_local_arm_hydrates_like_join(spark, index_root,
+                                             monkeypatch):
+    """The local arm's `doc_id IN (...)` hydrate returns the rows the
+    distributed arm's results get, field for field; a 1-byte switch
+    point sends the request to the distributed arm; an id missing from
+    the doc store keeps null fields, as the lazy join's does."""
+    eng = SearchEngine(spark, index_root)
+    local = eng.search("apple banana", k=10)
+    dist = _with_switch_point(monkeypatch, 1,
+                              lambda: eng.search("apple banana", k=10))
+    assert eng.served_counts() == {"local": 1, "distributed": 1}
+    assert local and [r.asDict() for r in local] == \
+        [r.asDict() for r in dist]
+    assert list(local[0].asDict()) == ["query_id", "rank", "doc_id",
+                                       "score", "conv_id", "turn_idx",
+                                       "role", "snippet"]
+    joined = sorted(eng.search_batch((Query("q", "apple banana", k=10),),
+                                     hydrate=True).collect(),
+                    key=lambda r: r["rank"])
+    assert [r.asDict() for r in joined] == [r.asDict() for r in local]
+    ghost = eng._hydrate_rows([Row(query_id="q", rank=1, doc_id=10 ** 9,
+                                   rrf=0.5)])
+    assert [r.asDict() for r in ghost] == [dict(
+        query_id="q", rank=1, doc_id=10 ** 9, rrf=0.5, conv_id=None,
+        turn_idx=None, role=None, snippet=None)]

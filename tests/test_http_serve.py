@@ -12,6 +12,7 @@ import pytest
 
 from jobs.http_serve_job import serve_http
 from mini_distributed_search_engine_spark.plans.pipeline import StagedIndexBuild
+from mini_distributed_search_engine_spark.query import engine as engine_mod
 from mini_distributed_search_engine_spark.query.engine import SearchEngine
 from mini_distributed_search_engine_spark.sources.transcripts import (
     synthesize_transcripts_pdf)
@@ -57,6 +58,23 @@ def test_words_and_stats_routes(http_base):
     assert code == 200 and all(t.startswith("s") for t in body["terms"])
     code, body = _get(f"{http_base}/stats")
     assert code == 200 and body["n_docs"] > 0 and body["served"] >= 1
+
+
+def test_stats_counts_requests_per_arm(http_base, monkeypatch):
+    """/stats reports how many eager requests each serving arm took: the
+    fixture's segments fit under the default switch point (local arm);
+    with the switch point at -1 the same request goes to the distributed
+    arm."""
+    _, before = _get(f"{http_base}/stats")
+    _get(f"{http_base}/search?q=apple+banana&k=5")
+    _get(f"{http_base}/near?q=apple+banana&k=5&window=10")
+    with monkeypatch.context() as m:
+        m.setattr(engine_mod, "LOCAL_ARM_MAX_BYTES",
+                  {"tf": -1, "pos": -1})
+        _get(f"{http_base}/search?q=apple+banana&k=5")
+    _, after = _get(f"{http_base}/stats")
+    assert after["served_local"] == before["served_local"] + 2
+    assert after["served_distributed"] == before["served_distributed"] + 1
 
 
 def test_hybrid_route(http_base):
